@@ -5,10 +5,19 @@ consumes it through ``__spark_entry__.queries()`` / ``oracle_sql()``.
 Spark callables take (spark, sf_dir) and return a DataFrame whose column
 names/types match the oracle exactly (the driver sorts columns by name and
 hashes values).
+
+Inputs that several queries share (raw tables, snapshot frames, derived
+index tables, trained models, density decisions) are built once per
+session and getter arguments by getters declared with ``session_memo``.
+The memo store is an attribute of the SparkSession, so it lives exactly
+as long as the session. ``clear_session_memos`` evicts the algorithmic
+memos and unpersists their cached frames.
 """
 
 from __future__ import annotations
 
+import functools
+import inspect
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -24,6 +33,7 @@ from .operators import report as reportops
 from .operators import schema_registry as sr
 from .operators import usage, windows
 from .pipelines import curation, dedup, sampling, similarity
+from .pipelines import multimodal as mm
 from .pipelines import text as textops
 from .sinks import exports
 from .snapshot import build_snapshots, filter_cluster, topics_with_configs
@@ -33,48 +43,116 @@ from .snapshot import build_snapshots, filter_cluster, topics_with_configs
 # the cluster-carrying lag/metrics surfaces.
 REPORT_CLUSTER = "primary"
 
-_SNAP_CACHE: dict[tuple[int, str], dict[str, DataFrame]] = {}
-_CLUSTER_SNAP_CACHE: dict[tuple[int, str, str], dict[str, DataFrame]] = {}
-_TOPICS_DF_CACHE: dict[tuple[int, str, str], DataFrame] = {}
+#: Attribute on the SparkSession that holds its memo store, a dict
+#: ``{(memo name, getter arguments): value}``.
+_MEMO_ATTR = "_overwatch_memos"
+
+#: Names of the memos declared ``plumbing=True``.
+_PLUMBING: set[str] = set()
 
 
+def session_memo(name: str, *, plumbing: bool = False):
+    """Memoize a ``(spark, *args)`` getter in the session's memo store,
+    keyed by ``name`` and the arguments after ``spark`` with defaults
+    applied. A module-level store would pin a stopped session, since
+    the memoized frames refer to it.
+
+    ``plumbing`` memos (raw parquet, snapshots and the report frames
+    built on them) are shared I/O, identical for every query, and
+    ``clear_session_memos`` never evicts them. It can evict every other
+    memo, so a scale probe's timed row measures the query's own cost
+    instead of whichever sibling warmed the memo (VERDICT r12 next #7:
+    the r12 probe's LPA row read as free because modularity had
+    already paid the iteration)."""
+    if plumbing:
+        _PLUMBING.add(name)
+
+    def wrap(build):
+        sig = inspect.signature(build)
+
+        @functools.wraps(build)
+        def getter(spark, *args, **kwargs):
+            bound = sig.bind(spark, *args, **kwargs)
+            bound.apply_defaults()
+            key = (name, tuple(bound.arguments.values())[1:])
+            store = vars(spark).setdefault(_MEMO_ATTR, {})
+            if key not in store:
+                store[key] = build(*bound.args, **bound.kwargs)
+            return store[key]
+
+        return getter
+
+    return wrap
+
+
+def clear_session_memos(
+    spark: SparkSession,
+    sf_dir: str | None = None,
+    keep: set[str] | frozenset[str] = frozenset(),
+) -> list[str]:
+    """Evict every algorithmic memo for this session (optionally only
+    for one sf_dir) and unpersist any cached frames inside. Returns the
+    names of the memos that actually held something, in the order they
+    were filled — the probe stamps these on its rows so cold/warm
+    timings are distinguishable. ``keep`` exempts memos by name: the
+    probe keeps ``edges`` because the co-purchase edge table is a
+    PERSISTED input at 100 TB (the ingest pipeline maintains it — see
+    get_copurchase_edges), so re-deriving it per query would charge
+    every graph row a cost no production run pays."""
+    store = vars(spark).get(_MEMO_ATTR, {})
+    cleared: list[str] = []
+    for key in list(store):
+        name, args = key
+        if (
+            name in _PLUMBING
+            or name in keep
+            or (sf_dir is not None and sf_dir not in args)
+        ):
+            continue
+        val = store.pop(key)
+        for item in val if isinstance(val, tuple) else (val,):
+            if hasattr(item, "unpersist"):
+                try:
+                    item.unpersist()
+                except Exception:  # noqa: BLE001 — best-effort evict
+                    pass
+        if name not in cleared:
+            cleared.append(name)
+    return cleared
+
+
+@session_memo("snaps", plumbing=True)
 def get_snaps(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    key = (id(spark), sf_dir)
-    if key not in _SNAP_CACHE:
-        # defend against an externally-created session (the driver's):
-        # AQE + bounded shuffle width are what our plans are designed for
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        try:
-            if int(spark.conf.get("spark.sql.shuffle.partitions")) > 64:
-                spark.conf.set("spark.sql.shuffle.partitions", "64")
-        except Exception as exc:  # non-integer/modifiable conf: keep as-is
-            import logging
+    # defend against a session the caller created (not get_spark):
+    # AQE + bounded shuffle width are what our plans are designed for
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
+    try:
+        if int(spark.conf.get("spark.sql.shuffle.partitions")) > 64:
+            spark.conf.set("spark.sql.shuffle.partitions", "64")
+    except Exception as exc:  # non-integer/modifiable conf: keep as-is
+        import logging
 
-            logging.getLogger(__name__).debug(
-                "shuffle.partitions not adjusted: %s", exc
-            )
-        # cache=True: the snapshot frames are dim-sized; every report query
-        # re-reads them (the reference re-scans its pandas frames per
-        # category the same way, `reporting/topics.py:17-111`)
-        _SNAP_CACHE[key] = build_snapshots(spark, sf_dir, cache=True)
-    return _SNAP_CACHE[key]
+        logging.getLogger(__name__).debug(
+            "shuffle.partitions not adjusted: %s", exc
+        )
+    # cache=True: the snapshot frames are dim-sized; every report query
+    # re-reads them (the reference re-scans its pandas frames per
+    # category the same way, `reporting/topics.py:17-111`)
+    return build_snapshots(spark, sf_dir, cache=True)
 
 
+@session_memo("cluster_snaps", plumbing=True)
 def get_cluster_snaps(
     spark: SparkSession, sf_dir: str, cluster: str = REPORT_CLUSTER
 ) -> dict[str, DataFrame]:
     """Snapshot frames pruned to one cluster — the reference's
     one-report-process-per-cluster topology (`overwatch.py:92-120`) as a
     partition-pruning filter over the shared snapshot tables."""
-    key = (id(spark), sf_dir, cluster)
-    if key not in _CLUSTER_SNAP_CACHE:
-        _CLUSTER_SNAP_CACHE[key] = filter_cluster(
-            get_snaps(spark, sf_dir), cluster
-        )
-    return _CLUSTER_SNAP_CACHE[key]
+    return filter_cluster(get_snaps(spark, sf_dir), cluster)
 
 
+@session_memo("topics_df", plumbing=True)
 def get_topics_df(
     spark: SparkSession, sf_dir: str, cluster: str = REPORT_CLUSTER
 ) -> DataFrame:
@@ -82,66 +160,46 @@ def get_topics_df(
     (multiple actions) — cache it once per (session, sf_dir, cluster),
     mirroring the reference materializing the pandas frame once per
     scan per cluster."""
-    key = (id(spark), sf_dir, cluster)
-    if key not in _TOPICS_DF_CACHE:
-        _TOPICS_DF_CACHE[key] = usage.build_topics_df(
-            get_cluster_snaps(spark, sf_dir, cluster)
-        ).localCheckpoint(eager=False)
-    return _TOPICS_DF_CACHE[key]
+    return usage.build_topics_df(
+        get_cluster_snaps(spark, sf_dir, cluster)
+    ).localCheckpoint(eager=False)
 
 
-_SHINGLE_CACHE: dict[tuple[int, str], DataFrame] = {}
-_BANDS_CACHE: dict[tuple[int, str], DataFrame] = {}
-_SIMHASH_CACHE: dict[tuple[int, str], DataFrame] = {}
-_PHASH_CACHE: dict[tuple[int, str], DataFrame] = {}
-_LAG_CACHE: dict[tuple[int, str], DataFrame] = {}
-_GROUPS_DF_CACHE: dict[tuple[int, str], DataFrame] = {}
-_RAW_CACHE: dict[tuple[int, str], dict[str, DataFrame]] = {}
-
-
+@session_memo("raw", plumbing=True)
 def get_raw_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """The raw testdata DataFrames keyed by (session, sf_dir) — stable
     even if another sf_dir re-registers the like-named temp views."""
     from .snapshot import register_raw_tables
 
-    key = (id(spark), sf_dir)
-    if key not in _RAW_CACHE:
-        _RAW_CACHE[key] = register_raw_tables(spark, sf_dir)
-    return _RAW_CACHE[key]
+    return register_raw_tables(spark, sf_dir)
 
 
+@session_memo("groups_df", plumbing=True)
 def get_groups_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """groups_df materialized once per (session, sf_dir) — the same
     once-per-scan caching the reference applies to its pandas frame
     (`clusters.py:332-342`); governance and report queries re-read it."""
-    key = (id(spark), sf_dir)
-    if key not in _GROUPS_DF_CACHE:
-        from .operators import lag as _lag
-
-        # localCheckpoint, not cache: truncates the analytic lineage so
-        # downstream queries don't re-analyze it per construction (see
-        # build_snapshots)
-        _GROUPS_DF_CACHE[key] = _lag.build_groups_df(
-            get_cluster_snaps(spark, sf_dir),
-            lag_rows=get_cluster_lag_rows(spark, sf_dir),
-        ).localCheckpoint(eager=False)
-    return _GROUPS_DF_CACHE[key]
+    # localCheckpoint, not cache: truncates the analytic lineage so
+    # downstream queries don't re-analyze it per construction (see
+    # build_snapshots)
+    return lagops.build_groups_df(
+        get_cluster_snaps(spark, sf_dir),
+        lag_rows=get_cluster_lag_rows(spark, sf_dir),
+    ).localCheckpoint(eager=False)
 
 
+@session_memo("lag", plumbing=True)
 def get_lag_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized cached lag frame (ALL clusters, cluster column carried) —
     shared by lag_per_topic, groups_df, lag_nested, and metrics_snapshot
     (each would otherwise rebuild the fact join per action)."""
-    key = (id(spark), sf_dir)
-    if key not in _LAG_CACHE:
-        # localCheckpoint, not cache: the lag join lineage is ~850 plan
-        # lines; cache leaves it attached and every consumer re-analyzes
-        # it at construction time (the dominant share of the metrics
-        # fixed cost — VERDICT r5 What's-wrong #4)
-        _LAG_CACHE[key] = lagops.lag_per_partition(
-            get_snaps(spark, sf_dir)
-        ).localCheckpoint(eager=False)
-    return _LAG_CACHE[key]
+    # localCheckpoint, not cache: the lag join lineage is ~850 plan
+    # lines; cache leaves it attached and every consumer re-analyzes
+    # it at construction time (the dominant share of the metrics
+    # fixed cost — VERDICT r5 What's-wrong #4)
+    return lagops.lag_per_partition(
+        get_snaps(spark, sf_dir)
+    ).localCheckpoint(eager=False)
 
 
 def get_cluster_lag_rows(
@@ -152,30 +210,19 @@ def get_cluster_lag_rows(
     return get_lag_rows(spark, sf_dir).filter(F.col("cluster") == cluster)
 
 
-_EDGES_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
+@session_memo("edges")
 def get_copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized co-purchase edge set per (session, sf_dir) — the shared
     input of the whole graph family (degree, PageRank, association
     rules). localCheckpoint (lineage truncation + persist) like the
     other derived-table memos; at 100 TB this is the written edge table
     the ingest pipeline maintains."""
-    from .operators import graph as _graph
-
-    key = (id(spark), sf_dir)
-    if key not in _EDGES_CACHE:
-        _EDGES_CACHE[key] = _graph.copurchase_edges(
-            get_raw_tables(spark, sf_dir)["lineitem"]
-        ).localCheckpoint(eager=False)
-    return _EDGES_CACHE[key]
+    return graph.copurchase_edges(
+        get_raw_tables(spark, sf_dir)["lineitem"]
+    ).localCheckpoint(eager=False)
 
 
-_LPA_CACHE: dict[
-    tuple[int, str], tuple[DataFrame, DataFrame, int, int]
-] = {}
-
-
+@session_memo("lpa_graph")
 def get_lpa_graph(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, int, int]:
@@ -184,38 +231,22 @@ def get_lpa_graph(
     consumed opaquely) per (session, sf_dir) — static per dataset, shared
     across label-propagation calls the way get_copurchase_edges shares
     the edge set; at 100 TB both live as written tables."""
-    from .operators import graph as _graph
-
-    key = (id(spark), sf_dir)
-    if key not in _LPA_CACHE:
-        _LPA_CACHE[key] = _graph.lpa_graph_state(
-            get_copurchase_edges(spark, sf_dir)
-        )
-    return _LPA_CACHE[key]
+    return graph.lpa_graph_state(get_copurchase_edges(spark, sf_dir))
 
 
-_LPA_LABELS_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
+@session_memo("lpa_labels")
 def get_lpa_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized round-_LPA_ROUNDS (v, label) frame per (session,
     sf_dir) — graph_label_propagation and graph_modularity score the
     SAME labeling, so the power iteration runs once per dataset, not
     once per report query (VERDICT r11 next #4). The frame is already
     localCheckpoint-materialized by the delta loop's final round."""
-    from .operators import graph as _graph
-
-    key = (id(spark), sf_dir)
-    if key not in _LPA_LABELS_CACHE:
-        _LPA_LABELS_CACHE[key] = _graph.lpa_labels_delta(
-            None, graph_state=get_lpa_graph(spark, sf_dir)
-        )
-    return _LPA_LABELS_CACHE[key]
+    return graph.lpa_labels_delta(
+        None, graph_state=get_lpa_graph(spark, sf_dir)
+    )
 
 
-_TRI_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
+@session_memo("triangles")
 def get_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized triangle enumeration per (session, sf_dir): the global
     and per-node clustering queries both consume it, and the per-node
@@ -224,79 +255,71 @@ def get_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     three times). localCheckpoint so every consumer reads ONE
     materialized enumeration; at 100 TB this is the written triangle
     table the graph pipeline maintains next to the edge table."""
-    from .operators import graph as _graph
-
-    key = (id(spark), sf_dir)
-    if key not in _TRI_CACHE:
-        _TRI_CACHE[key] = _graph.triangles(
-            get_raw_tables(spark, sf_dir)["lineitem"],
-            edges=get_copurchase_edges(spark, sf_dir),
-        ).localCheckpoint(eager=False)
-    return _TRI_CACHE[key]
+    return graph.triangles(
+        get_raw_tables(spark, sf_dir)["lineitem"],
+        edges=get_copurchase_edges(spark, sf_dir),
+    ).localCheckpoint(eager=False)
 
 
-_IVF_CACHE: dict[tuple[int, str], tuple] = {}
-
-
+@session_memo("ivf")
 def get_ivf(spark: SparkSession, sf_dir: str) -> tuple:
     """Memoized IVF coarse quantizer per (session, sf_dir): KMeans
     training is the dominant cost of both ANN probing and the cluster
     rollup, and the reference pattern at scale is train-once /
     probe-many (the model is persisted, not refit per query). The
     cached cell assignments back both surfaces."""
-    from .pipelines import similarity as sim
-
-    key = (id(spark), sf_dir)
-    if key not in _IVF_CACHE:
-        model, assigned = sim.ivf_index(get_raw_tables(spark, sf_dir)["embeddings"])
-        _IVF_CACHE[key] = (model, assigned.cache())
-    return _IVF_CACHE[key]
+    model, assigned = similarity.ivf_index(
+        get_raw_tables(spark, sf_dir)["embeddings"]
+    )
+    return (model, assigned.cache())
 
 
-_PQ_CACHE: dict[tuple[int, str], tuple] = {}
-
-
+@session_memo("pq")
 def get_pq(spark: SparkSession, sf_dir: str) -> tuple:
     """Memoized PQ codebooks + cached packed codes per (session, sf_dir)
     — train-once/probe-many like get_ivf: codebooks are a corpus
     distribution estimate, and the 8-byte code table IS the ANN index
     every PQ query scans."""
-    from .pipelines import similarity as sim
-
-    key = (id(spark), sf_dir)
-    if key not in _PQ_CACHE:
-        emb = get_raw_tables(spark, sf_dir)["embeddings"]
-        cb = sim.pq_train(emb)
-        _PQ_CACHE[key] = (cb, sim.pq_encode(emb, cb).cache())
-    return _PQ_CACHE[key]
+    emb = get_raw_tables(spark, sf_dir)["embeddings"]
+    cb = similarity.pq_train(emb)
+    return (cb, similarity.pq_encode(emb, cb).cache())
 
 
+@session_memo("shingle")
 def get_shingle_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized cached shingle-set frame — a fresh .cache() per call would
     leak a new cached RDD every invocation and degrade long sessions."""
-    key = (id(spark), sf_dir)
-    if key not in _SHINGLE_CACHE:
-        # sf_dir-keyed frame, NOT spark.table("documents") — the temp
-        # view points at whichever sf_dir registered last (same aliasing
-        # hazard raw() guards against)
-        _SHINGLE_CACHE[key] = dedup.shingle_docs(
-            get_raw_tables(spark, sf_dir)["documents"]
-        ).cache()
-    return _SHINGLE_CACHE[key]
+    # sf_dir-keyed frame, NOT spark.table("documents") — the temp
+    # view points at whichever sf_dir registered last (same aliasing
+    # hazard raw() guards against)
+    return dedup.shingle_docs(
+        get_raw_tables(spark, sf_dir)["documents"]
+    ).cache()
 
 
+@session_memo("simhash")
 def get_simhash_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized SimHash fingerprint frame (r7): same no-ReusedExchange
     rationale as get_minhash_bands — the chunk self-join otherwise runs
     the md5 fingerprint fold once per side."""
-    key = (id(spark), sf_dir)
-    if key not in _SIMHASH_CACHE:
-        _SIMHASH_CACHE[key] = dedup.simhash_fingerprints(
+    return dedup.simhash_fingerprints(
+        get_raw_tables(spark, sf_dir)["documents"]
+    ).localCheckpoint(eager=True)
+
+
+@session_memo("phash")
+def get_phash_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Memoized perceptual-hash fingerprints of the synthesized media
+    corpus: the media_phash_pairs bucket self-join reads them once per
+    join side."""
+    return mm.media_phash(
+        mm.synth_media_from_documents(
             get_raw_tables(spark, sf_dir)["documents"]
-        ).localCheckpoint(eager=True)
-    return _SIMHASH_CACHE[key]
+        )
+    ).localCheckpoint(eager=True)
 
 
+@session_memo("bands")
 def get_minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized MinHash band index (r7): the 12-permutation md5
     signature chain is the expensive half of the LSH query, and the
@@ -304,63 +327,42 @@ def get_minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     without a memo the whole chain executes once per join branch.
     localCheckpoint, not cache: same lineage-truncation rationale as
     the snapshot memos (NOTES r6 #4)."""
-    key = (id(spark), sf_dir)
-    if key not in _BANDS_CACHE:
-        _BANDS_CACHE[key] = dedup.minhash_bands(
-            get_shingle_docs(spark, sf_dir)
-        ).localCheckpoint(eager=True)
-    return _BANDS_CACHE[key]
+    return dedup.minhash_bands(
+        get_shingle_docs(spark, sf_dir)
+    ).localCheckpoint(eager=True)
 
 
-_WHITEN_CACHE: dict[tuple[int, str], tuple] = {}
-
-
+@session_memo("whiten")
 def get_whiten_model(spark: SparkSession, sf_dir: str) -> tuple:
     """Memoized ZCA whitening model per (session, sf_dir) —
     train-once/project-many like get_ivf/get_pq: the moment pass +
     driver eigh is the expensive fit, the projection is the per-query
     work."""
-    key = (id(spark), sf_dir)
-    if key not in _WHITEN_CACHE:
-        _WHITEN_CACHE[key] = similarity.pca_whiten_model(
-            get_raw_tables(spark, sf_dir)["embeddings"]
-        )
-    return _WHITEN_CACHE[key]
+    return similarity.pca_whiten_model(
+        get_raw_tables(spark, sf_dir)["embeddings"]
+    )
 
 
-_WINNOW_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
+@session_memo("winnow")
 def get_winnow_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized winnowed fingerprint frame (r7): shared by the
     fingerprint query and both shared-passage queries, whose gram_hash
     self-joins otherwise execute the winnow chain once per join side
     (no ReusedExchange — same rationale as get_minhash_bands)."""
-    key = (id(spark), sf_dir)
-    if key not in _WINNOW_CACHE:
-        _WINNOW_CACHE[key] = textops.winnow_fingerprints(
-            get_raw_tables(spark, sf_dir)["documents"]
-        ).localCheckpoint(eager=True)
-    return _WINNOW_CACHE[key]
+    return textops.winnow_fingerprints(
+        get_raw_tables(spark, sf_dir)["documents"]
+    ).localCheckpoint(eager=True)
 
 
-_CONTAINMENT_K_CACHE: dict[tuple[int, str], int] = {}
-
-
+@session_memo("containment_k")
 def get_containment_k(spark: SparkSession, sf_dir: str) -> int:
     """Memoized density-adaptive shingle width for the containment
     family (VERDICT r11 next #1): one collision-mass pre-pass over the
     shared K=SHINGLE_K shingle frame per (session, sf_dir)."""
-    key = (id(spark), sf_dir)
-    if key not in _CONTAINMENT_K_CACHE:
-        _CONTAINMENT_K_CACHE[key] = dedup.choose_containment_k(
-            get_shingle_docs(spark, sf_dir),
-            get_raw_tables(spark, sf_dir)["documents"],
-        )
-    return _CONTAINMENT_K_CACHE[key]
-
-
-_CONTAINMENT_DOCS_CACHE: dict[tuple[int, str], DataFrame] = {}
+    return dedup.choose_containment_k(
+        get_shingle_docs(spark, sf_dir),
+        get_raw_tables(spark, sf_dir)["documents"],
+    )
 
 
 def get_containment_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -368,20 +370,22 @@ def get_containment_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     get_shingle_docs frame when the corpus stays at K=SHINGLE_K (the
     open-vocab common case — no extra pass), a memoized wide-K frame
     when the density rule escalates."""
-    k = get_containment_k(spark, sf_dir)
-    if k == dedup.CONTAINMENT_K_LADDER[0]:
+    if get_containment_k(spark, sf_dir) == dedup.CONTAINMENT_K_LADDER[0]:
         return get_shingle_docs(spark, sf_dir)
-    key = (id(spark), sf_dir)
-    if key not in _CONTAINMENT_DOCS_CACHE:
-        _CONTAINMENT_DOCS_CACHE[key] = dedup.shingle_docs(
-            get_raw_tables(spark, sf_dir)["documents"], k
-        ).cache()
-    return _CONTAINMENT_DOCS_CACHE[key]
+    return _get_wide_containment_docs(spark, sf_dir)
 
 
-_CONTAINMENT_PROBES_CACHE: dict[tuple[int, str], DataFrame] = {}
+@session_memo("containment_docs")
+def _get_wide_containment_docs(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    return dedup.shingle_docs(
+        get_raw_tables(spark, sf_dir)["documents"],
+        get_containment_k(spark, sf_dir),
+    ).cache()
 
 
+@session_memo("containment_probes")
 def get_containment_probes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized rarest-first probe frame at the adaptive width — the
     corpus-frequency join + per-doc rarest-first window is the
@@ -389,35 +393,23 @@ def get_containment_probes(spark: SparkSession, sf_dir: str) -> DataFrame:
     persisted index artifact next to the band index. The audit query's
     deliberately tight max_bucket changes the probe_capped flag, so it
     derives its own frame."""
-    key = (id(spark), sf_dir)
-    if key not in _CONTAINMENT_PROBES_CACHE:
-        _CONTAINMENT_PROBES_CACHE[key] = dedup.containment_probes_rarest(
-            get_containment_docs(spark, sf_dir), 0.8
-        ).localCheckpoint(eager=True)
-    return _CONTAINMENT_PROBES_CACHE[key]
+    return dedup.containment_probes_rarest(
+        get_containment_docs(spark, sf_dir), 0.8
+    ).localCheckpoint(eager=True)
 
 
-_CONTAINMENT_CAPPED_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
+@session_memo("containment_capped")
 def get_containment_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized posting list at the EXACT adaptive cap (max probe df —
     recall 1.0 by construction, see dedup.containment_adaptive_cap);
     persisted-index twin of get_containment_probes."""
-    key = (id(spark), sf_dir)
-    if key not in _CONTAINMENT_CAPPED_CACHE:
-        cap = dedup.containment_adaptive_cap(
-            get_containment_probes(spark, sf_dir)
-        )
-        _CONTAINMENT_CAPPED_CACHE[key] = dedup.containment_postings_for_cap(
-            get_containment_docs(spark, sf_dir), cap
-        ).localCheckpoint(eager=True)
-    return _CONTAINMENT_CAPPED_CACHE[key]
+    cap = dedup.containment_adaptive_cap(get_containment_probes(spark, sf_dir))
+    return dedup.containment_postings_for_cap(
+        get_containment_docs(spark, sf_dir), cap
+    ).localCheckpoint(eager=True)
 
 
-_NEARDUP_BITS_CACHE: dict[tuple[int, str], int] = {}
-
-
+@session_memo("neardup_bits")
 def get_neardup_bits(spark: SparkSession, sf_dir: str) -> int:
     """Memoized density-adaptive LSH width for the embedding near-dup
     family (VERDICT r11 next #1): one measured bucket-mass pre-pass
@@ -425,19 +417,12 @@ def get_neardup_bits(spark: SparkSession, sf_dir: str) -> int:
     every query composing the pair graph — the pair query itself, the
     density profile, semantic components, and the curation chain all
     see the SAME index, exactly like a persisted production index."""
-    from .pipelines import similarity
-
-    key = (id(spark), sf_dir)
-    if key not in _NEARDUP_BITS_CACHE:
-        _NEARDUP_BITS_CACHE[key] = similarity.choose_neardup_bits(
-            get_raw_tables(spark, sf_dir)["embeddings"]
-        )
-    return _NEARDUP_BITS_CACHE[key]
+    return similarity.choose_neardup_bits(
+        get_raw_tables(spark, sf_dir)["embeddings"]
+    )
 
 
-_DSIR_BUCKETED_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
+@session_memo("dsir_bucketed")
 def get_dsir_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized hashed-unigram (doc_id, source, b) token frame (r7):
     shared by the DSIR family and the NB classifier. Without the memo
@@ -445,81 +430,9 @@ def get_dsir_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     + scoring) and each of the three registered queries re-derives it
     from scratch. localCheckpoint, not cache: lineage truncation, same
     rationale as the snapshot memos (NOTES r6 #4)."""
-    key = (id(spark), sf_dir)
-    if key not in _DSIR_BUCKETED_CACHE:
-        from .pipelines.sampling import DSIR_BUCKETS, _dsir_bucketed
-
-        _DSIR_BUCKETED_CACHE[key] = _dsir_bucketed(
-            get_raw_tables(spark, sf_dir)["documents"], DSIR_BUCKETS
-        ).localCheckpoint(eager=True)
-    return _DSIR_BUCKETED_CACHE[key]
-
-
-#: The memoized ALGORITHMIC artifacts (derived index tables, trained
-#: state, iterative-loop outputs, density decisions) — everything a
-#: scale probe must be able to drop so a timed row measures the query's
-#: own cost instead of whichever sibling warmed the memo (VERDICT r12
-#: next #7: the r12 probe's LPA row read as free because modularity had
-#: already paid the iteration). Raw-parquet and snapshot caches stay:
-#: they are shared I/O plumbing, identical for every query.
-_ALGO_CACHES: dict[str, dict] = {
-    "shingle": _SHINGLE_CACHE,
-    "bands": _BANDS_CACHE,
-    "simhash": _SIMHASH_CACHE,
-    "phash": _PHASH_CACHE,
-    "edges": _EDGES_CACHE,
-    "lpa_graph": _LPA_CACHE,
-    "lpa_labels": _LPA_LABELS_CACHE,
-    "triangles": _TRI_CACHE,
-    "ivf": _IVF_CACHE,
-    "pq": _PQ_CACHE,
-    "whiten": _WHITEN_CACHE,
-    "winnow": _WINNOW_CACHE,
-    "containment_k": _CONTAINMENT_K_CACHE,
-    "containment_docs": _CONTAINMENT_DOCS_CACHE,
-    "containment_probes": _CONTAINMENT_PROBES_CACHE,
-    "containment_capped": _CONTAINMENT_CAPPED_CACHE,
-    "neardup_bits": _NEARDUP_BITS_CACHE,
-    "dsir_bucketed": _DSIR_BUCKETED_CACHE,
-}
-
-
-def clear_session_memos(
-    spark: SparkSession,
-    sf_dir: str | None = None,
-    keep: set[str] | frozenset[str] = frozenset(),
-) -> list[str]:
-    """Evict every algorithmic memo for this session (optionally only
-    for one sf_dir) and unpersist any cached frames inside. Returns the
-    names of the caches that actually held something — the probe stamps
-    these on its rows so cold/warm timings are distinguishable.
-    ``keep`` exempts caches by _ALGO_CACHES name: the probe keeps
-    ``edges`` because the co-purchase edge table is a PERSISTED input
-    at 100 TB (the ingest pipeline maintains it — see
-    get_copurchase_edges), so re-deriving it per query would charge
-    every graph row a cost no production run pays."""
-    cleared: list[str] = []
-    for name, cache in _ALGO_CACHES.items():
-        if name in keep:
-            continue
-        keys = [
-            k
-            for k in list(cache)
-            if k[0] == id(spark)
-            and (sf_dir is None or sf_dir in k[1:])
-        ]
-        for key in keys:
-            val = cache.pop(key)
-            items = val if isinstance(val, tuple) else (val,)
-            for item in items:
-                if hasattr(item, "unpersist"):
-                    try:
-                        item.unpersist()
-                    except Exception:  # noqa: BLE001 — best-effort evict
-                        pass
-        if keys:
-            cleared.append(name)
-    return cleared
+    return sampling._dsir_bucketed(
+        get_raw_tables(spark, sf_dir)["documents"], sampling.DSIR_BUCKETS
+    ).localCheckpoint(eager=True)
 
 
 def _cluster_statistics_by_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1083,18 +996,12 @@ def spark_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # tests/test_multimodal.py). Nested feature vector serialized to JSON
     # so the driver canonicalizer sees only scalar columns.
     def _media(s: SparkSession, d: str) -> DataFrame:
-        from .pipelines import multimodal as mm
-
         return mm.synth_media_from_documents(raw(s, d, "documents"))
 
     def _media_decode(s: SparkSession, d: str) -> DataFrame:
-        from .pipelines import multimodal as mm
-
         return mm.decode_media(_media(s, d))
 
     def _media_features(s: SparkSession, d: str) -> DataFrame:
-        from .pipelines import multimodal as mm
-
         return mm.extract_features(_media(s, d)).select(
             "doc_id",
             "media_type",
@@ -1103,8 +1010,6 @@ def spark_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     def _media_header(s: SparkSession, d: str) -> DataFrame:
-        from .pipelines import multimodal as mm
-
         return mm.extract_header_metadata(_media(s, d))
 
     q["media_decode"] = _media_decode
@@ -1117,22 +1022,13 @@ def spark_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # body, pigeonhole-bucketed pair join — fully oracle-able (the hash
     # is integer-exact in both engines)
     def _media_phash_pairs(s: SparkSession, d: str) -> DataFrame:
-        from .pipelines import multimodal as mm
-
-        key = (id(s), d)
-        if key not in _PHASH_CACHE:
-            _PHASH_CACHE[key] = mm.media_phash(_media(s, d)).localCheckpoint(
-                eager=True
-            )
-        return mm.media_phash_pairs(_media(s, d), fps=_PHASH_CACHE[key])
+        return mm.media_phash_pairs(_media(s, d), fps=get_phash_fps(s, d))
 
     q["media_phash_pairs"] = _media_phash_pairs
 
     # frame-granular video near-dup (rows-only: byte-window frames are
     # Python-side; python-parity + constructed-recall tests)
     def _frame_phash_pairs(s: SparkSession, d: str) -> DataFrame:
-        from .pipelines import multimodal as mm
-
         return mm.frame_phash_pairs(_media(s, d))
 
     q["media_frame_phash_pairs"] = _frame_phash_pairs

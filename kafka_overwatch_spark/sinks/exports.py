@@ -1,5 +1,5 @@
-"""Sinks (SURVEY §2.2): report JSON (K1), DataFrame CSV/JSON exports (K3),
-topic restore script (K6), SR backup manifest (K7).
+"""Sinks (SURVEY §2.2): DataFrame CSV/JSON exports (K3), topic restore
+script (K6), SR backup manifest (K7).
 
 The reference writes single local files via pandas
 (`reporting/tools.py:16-61`); at scale the engine writes partitioned
@@ -9,8 +9,6 @@ which is only sane for dim-sized frames — never the fact table.
 """
 
 from __future__ import annotations
-
-import json
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -118,13 +116,3 @@ def write_restore_script(snaps: dict[str, DataFrame], path: str) -> None:
     with open(path, "w") as fh:
         fh.write(_RESTORE_HEADER)
         fh.write("\n\n".join(row["command"] for row in rows) + "\n")
-
-
-def report_to_json(report_row: dict, path: str | None = None) -> str:
-    """K1 (`overwatch_resources/clusters.py:280-300`): serialize the nested
-    report struct with indent=2, optionally to a local file."""
-    payload = json.dumps(report_row, indent=2, default=str)
-    if path:
-        with open(path, "w") as fh:
-            fh.write(payload)
-    return payload

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .state import write_idempotent
+
 
 def emb_stream(spark: SparkSession, input_dir: str) -> DataFrame:
     """File stream of embedding rows; schema pinned from a static
@@ -82,31 +84,10 @@ class CentroidDriftMonitor:
             )
         )
         release = centroid_drift(batch_sums, lifetime)
-        prev = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
+        write_idempotent(release.coalesce(1), self.out_dir, batch_id)
+        write_idempotent(
+            batch_sums.coalesce(1), f"{self.base}/sums", batch_id
         )
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
-        try:
-            (
-                release.coalesce(1)
-                .withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(self.out_dir)
-            )
-            (
-                batch_sums.coalesce(1)
-                .withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(f"{self.base}/sums")
-            )
-        finally:
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev
-            )
 
 
 def run_centroid_monitor(

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .state import GenerationalState
+from .state import GenerationalState, write_idempotent
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -442,29 +442,12 @@ class DpCountsRelease:
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         from ..operators.relational import dp_noisy_counts
 
-        spark = batch_df.sparkSession
         release = dp_noisy_counts(
             batch_df,
             epsilon=self.epsilon,
             salt=f"{self.base_salt}:{batch_id}",
         ).select("event_type", "noisy_count")  # true_count NEVER leaves
-        prev = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
-        try:
-            (
-                release.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(self.out_dir)
-            )
-        finally:
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev
-            )
+        write_idempotent(release, self.out_dir, batch_id)
 
 
 def run_dp_counts_stream(
@@ -517,28 +500,10 @@ class BenfordMonitor:
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         from ..operators.relational import benford_audit
 
-        spark = batch_df.sparkSession
         release = benford_audit(batch_df).withColumn(
             "alert", F.abs(F.col("excess")) > self.alert_excess
         )
-        prev = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
-        try:
-            (
-                release.coalesce(1)
-                .withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(self.out_dir)
-            )
-        finally:
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev
-            )
+        write_idempotent(release.coalesce(1), self.out_dir, batch_id)
 
 
 def benford_lifetime(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -651,31 +616,10 @@ class ValueDriftMonitor:
             .agg(F.sum("cnt").alias("cnt"))
         )
         release = ks_drift_counts(batch_counts, lifetime)
-        prev = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
+        write_idempotent(release.coalesce(1), self.out_dir, batch_id)
+        write_idempotent(
+            batch_counts.coalesce(4), f"{self.base}/counts", batch_id
         )
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
-        try:
-            (
-                release.coalesce(1)
-                .withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(self.out_dir)
-            )
-            (
-                batch_counts.coalesce(4)
-                .withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(f"{self.base}/counts")
-            )
-        finally:
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev
-            )
 
 
 def run_value_drift_stream(

@@ -20,11 +20,33 @@ recoverable spot:
 Uses the Hadoop FS API throughout, so the same code runs on
 file:/hdfs:/s3a: paths. Crash cases are exercised in
 tests/test_events_stream.py::test_reach_sketch_state_commit_protocol.
+
+Handlers whose output is append-only per batch use the lighter
+``write_idempotent`` instead: one ``batch_id=N`` partition per batch,
+dynamically overwritten on replay.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+
+def write_idempotent(df: DataFrame, out_dir: str, batch_id: int) -> None:
+    """Replay-safe foreachBatch append: results land in a batch_id=N
+    partition that is dynamically OVERWRITTEN, so a batch replayed after
+    a crash-between-write-and-checkpoint replaces its own rows instead
+    of duplicating them. Dynamic mode is a per-write option, never the
+    session conf: streaming queries run on their own threads, and a
+    handler restoring the conf to static while another is mid-write
+    would make that write delete every other batch's partition."""
+    (
+        df.withColumn("batch_id", F.lit(batch_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id")
+        .parquet(out_dir)
+    )
 
 
 class GenerationalState:
